@@ -18,7 +18,7 @@ Stages (each a parquet checkpoint + lineage record, skipped on resume):
     norms0    — per-segment 1-byte norms
     segmentsK/normsK — tree-merge rounds (Lucene-style background merges)
 
-The final segment/norm tables + forms are everything the WAND query path
+The final segment/norm tables + forms are everything the ranked query path
 needs (see alix_spark.search.wand / alix_spark.index.reader).
 """
 

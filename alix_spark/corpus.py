@@ -204,8 +204,7 @@ class Corpus:
             from alix_spark.index.reader import expand_prefixes
 
             # one pruned scan of the forms table for any number of
-            # wildcards; unsorted preserves this path's historical
-            # per-prefix expansion order
+            # wildcards; each prefix's matches stay in scan order
             parsed.should.extend(
                 expand_prefixes(self.forms, parsed.wildcards)
             )

@@ -2,10 +2,13 @@
 
 The query-side counterpart of :mod:`alix_spark.build_index`: loads the
 meta, forms, final segment + norm tables, and answers the FULL query
-surface — ranked OR (block-max WAND), MUST / MUST_NOT boolean
-restriction, and wildcard prefix expansion — from the persisted
-segments, with no corpus rescan. Plays the role of the reference's
-``Alix.reader()/searcher()`` lazy singletons plus its query assembly
+surface — ranked OR, MUST / MUST_NOT boolean restriction, and wildcard
+prefix expansion — from the persisted segments, with no corpus rescan.
+Every ranked query is one pruned scan of the forms table (wildcard
+expansion and document frequencies together) plus one pass of the
+vectorized segment scorer of :mod:`alix_spark.search.wand`. Plays the
+role of the reference's ``Alix.reader()/searcher()`` lazy singletons
+plus its query assembly
 (``/root/reference/java/alix/lucene/Alix.java:298-344,687-756``).
 
 Scoring on this path is Lucene-faithful: per-doc lengths come from the
@@ -17,10 +20,15 @@ jar in tests/test_lucene_rank_identity.py.
 
 from __future__ import annotations
 
+import functools
+import operator
+
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
+
+from alix_spark.search.parser import ParsedQuery, parse
 
 POSTINGS_SCHEMA = StructType(
     [
@@ -31,30 +39,33 @@ POSTINGS_SCHEMA = StructType(
 )
 
 
-def expand_prefixes(
-    forms: DataFrame, prefixes: list[str], sort: bool = False
-) -> list[str]:
-    """Expand wildcard prefixes against a vocabulary table in ONE
-    pruned scan (all prefixes OR'ed into a single filter, one Spark
-    job for any number of wildcards — WildcardQuery,
-    ``Alix.java:731-734``). Output preserves the per-prefix grouping
-    contract: each prefix's matches (sorted when ``sort``), in input
-    order. Shared by :meth:`IndexReader.expand_wildcards` and
-    ``Corpus.parse`` so the expansion semantics live in one place."""
-    if not prefixes:
-        return []
-    cond = F.col("term").startswith(prefixes[0])
-    for prefix in prefixes[1:]:
-        cond = cond | F.col("term").startswith(prefix)
-    matched = [
-        r["term"] for r in forms.filter(cond).select("term").collect()
-    ]
-    if sort:
-        matched = sorted(matched)
+def _term_filter(terms: list[str], prefixes: list[str]) -> Column:
+    """``term IN (terms) OR term LIKE 'p%'`` for every prefix p."""
+    conds = [F.col("term").isin(terms)] if terms else []
+    conds += [F.col("term").startswith(p) for p in prefixes]
+    return functools.reduce(operator.or_, conds)
+
+
+def _by_prefix(matched: list[str], prefixes: list[str]) -> list[str]:
+    """Each prefix's matches, in prefix input order (a term matching two
+    prefixes is listed, and so scored, twice)."""
     out: list[str] = []
     for prefix in prefixes:
         out.extend(t for t in matched if t.startswith(prefix))
     return out
+
+
+def expand_prefixes(forms: DataFrame, prefixes: list[str]) -> list[str]:
+    """Expand wildcard prefixes against a vocabulary table in ONE
+    pruned scan (all prefixes OR'ed into a single filter, one Spark
+    job for any number of wildcards — WildcardQuery,
+    ``Alix.java:731-734``). Output preserves the per-prefix grouping
+    contract: each prefix's matches, in input order. The reader folds
+    the same filter into its df lookup (``IndexReader._parse_expanded``)."""
+    if not prefixes:
+        return []
+    rows = forms.filter(_term_filter([], prefixes)).select("term").collect()
+    return _by_prefix([r["term"] for r in rows], prefixes)
 
 
 class IndexReader:
@@ -184,7 +195,7 @@ class IndexReader:
         """(doc_id, term, tf) for the given terms, decoded from the
         compressed segments. The scan is bucket+term pruned (pushed to
         parquet); the varbyte decode runs per docId-range segment in an
-        Arrow kernel — the same distribution shape as the WAND scorer,
+        Arrow kernel — the same distribution shape as the segment scorer,
         so a Zipf-head term never concentrates on one task."""
         from alix_spark.index import segments as seg_mod
         from alix_spark.index.xxhash import term_bucket
@@ -197,7 +208,7 @@ class IndexReader:
             F.col("bucket").isin(buckets) & F.col("term").isin(uniq)
         )
 
-        def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def kernel(key, pdf):
             out = []
             for term, rows in pdf.groupby("term", sort=False):
                 ids, tfs = seg_mod.decode_blocks(rows)
@@ -227,12 +238,6 @@ class IndexReader:
 
         return doc_lens_from_norms(self.norms)
 
-    def expand_wildcards(self, prefixes: list[str]) -> list[str]:
-        """Prefix expansion against the persisted vocabulary
-        (WildcardQuery, ``Alix.java:731-734``); a tiny pruned scan of
-        the forms table."""
-        return expand_prefixes(self.forms, prefixes, sort=True)
-
     def phrase(self, terms: list[str]) -> DataFrame:
         """Exact-phrase matching → (doc_id, freq) off the positional
         segments (requires an index built with positions — the default;
@@ -241,18 +246,28 @@ class IndexReader:
 
         return phrase_search(self.segments, terms, n_buckets=self.n_buckets)
 
-    def _parse_expanded(self, q: str):
-        """Parse ``q`` with wildcards expanded against the persisted
-        vocabulary; ``parsed.had_wildcards`` records that expansion
-        happened (a no-match expansion is an empty BooleanQuery, not a
-        malformed query)."""
-        from alix_spark.search.parser import parse
-
+    def _parse_expanded(
+        self, q: str, with_dfs: bool = False
+    ) -> tuple[ParsedQuery, dict[str, int]]:
+        """Parse ``q`` and expand its wildcards (sorted) into SHOULD
+        clauses against the persisted vocabulary; with ``with_dfs`` also
+        return the corpus-wide df of every clause term. Both come from
+        ONE pruned scan of the forms table, and none is made when there
+        is nothing to look up. ``parsed.had_wildcards`` records that
+        expansion happened (a no-match expansion is an empty
+        BooleanQuery, not a malformed query)."""
         parsed = parse(q)
-        if parsed.wildcards:
-            parsed.should.extend(self.expand_wildcards(parsed.wildcards))
-            parsed.wildcards = []
-        return parsed
+        terms = sorted(set(parsed.all_terms())) if with_dfs else []
+        if not terms and not parsed.wildcards:
+            return parsed, {}
+        cond = _term_filter(terms, parsed.wildcards)
+        dfs = {
+            r["term"]: int(r["docs"])
+            for r in self.forms.filter(cond).select("term", "docs").collect()
+        }
+        parsed.should.extend(_by_prefix(sorted(dfs), parsed.wildcards))
+        parsed.wildcards = []
+        return parsed, dfs
 
     def boolean_docs(self, q: str) -> DataFrame:
         """ALL doc ids matching the boolean semantics of ``q`` (no
@@ -261,7 +276,7 @@ class IndexReader:
         (``Alix.java:714-754``)."""
         from alix_spark.search.boolean import matching_docs
 
-        parsed = self._parse_expanded(q)
+        parsed, _ = self._parse_expanded(q)
         decoded = self.decoded_postings(parsed.all_terms())
         return matching_docs(
             decoded, parsed, all_docs=self.doc_lens()
@@ -272,66 +287,34 @@ class IndexReader:
         """Top-k retrieval for the full +/-/* query grammar →
         (doc_id, score), served entirely from the persisted index.
 
-        * pure OR → block-max WAND over the compressed segments
-        * MUST / MUST_NOT → boolean restriction over decoded doc sets
-          (posting-join / anti-join), positive terms then scored with
-          corpus-wide idf (``Alix.java:714-754`` semantics)
-        * ``prefix*`` → vocabulary expansion into SHOULD clauses
-        * pure-negative → all docs minus exclusions, score 0
+        Planning is one pruned scan of the forms table: ``prefix*``
+        expands into SHOULD clauses and every clause term gets its
+        corpus-wide df. Every query then runs through the one vectorized
+        segment scorer (:func:`alix_spark.search.wand.wand_topk`): SHOULD
+        and MUST terms score, MUST restricts to docs holding every MUST
+        term, MUST_NOT clears docs (``Alix.java:714-754`` semantics), and
+        a pure-negative query returns all docs minus the exclusions at
+        score 0, in doc order.
         """
-        from alix_spark.search import bm25 as bm25_mod
         from alix_spark.search import wand as wand_mod
-        from alix_spark.search.boolean import matching_docs
 
-        parsed = self._parse_expanded(q)
+        parsed, dfs = self._parse_expanded(q, with_dfs=True)
         terms = parsed.must + parsed.should
-        if not parsed.must and not parsed.must_not:
-            if not terms:
-                if parsed.had_wildcards:
-                    # a wildcard that expanded to nothing matches
-                    # nothing — not a malformed query
-                    return (
-                        self.doc_lens()
-                        .select("doc_id")
-                        .withColumn("score", F.lit(0.0))
-                        .limit(0)
-                    )
-                raise ValueError(f"empty query: {q!r}")
-            return wand_mod.wand_topk(
-                self.segments,
-                self.norms,
-                terms,
-                self.dfs_for(terms),
-                self.n_docs,
-                self.avgdl,
-                k=k,
-                n_buckets=self.n_buckets,
-            )
-        decoded = self.decoded_postings(
-            sorted(set(terms) | set(parsed.must_not))
-        )
-        dls = self.doc_lens()
-        candidates = matching_docs(decoded, parsed, all_docs=dls)
-        if not terms:
-            # pure-negative: every surviving doc, unscored (score 0)
-            return (
-                candidates.select("doc_id")
-                .withColumn("score", F.lit(0.0))
-                .orderBy("doc_id")
-                .limit(k)
-            )
-        postings = decoded.filter(F.col("term").isin(terms)).join(
-            candidates, "doc_id", "left_semi"
-        )
-        # idf stays corpus-wide even when candidates are restricted
-        dfs = self.forms.select("term", F.col("docs").alias("df"))
-        return bm25_mod.bm25_topk(
-            postings,
-            dls,
+        if not terms and not parsed.must_not:
+            if parsed.had_wildcards:
+                # a wildcard that expanded to nothing matches nothing —
+                # not a malformed query
+                return self.spark.createDataFrame([], wand_mod.TOPK_SCHEMA)
+            raise ValueError(f"empty query: {q!r}")
+        return wand_mod.wand_topk(
+            self.segments,
+            self.norms,
             terms,
+            dfs,
+            self.n_docs,
+            self.avgdl,
             k=k,
-            lucene=True,
-            n_docs=self.n_docs,
-            avgdl=self.avgdl,
-            dfs=dfs,
+            n_buckets=self.n_buckets,
+            must=parsed.must,
+            must_not=parsed.must_not,
         )

@@ -12,7 +12,7 @@ Design (Lucene-shaped, Spark-native — see SURVEY.md §4.3/§7):
   to be the doc range so that segments stay directly concatenable.
 * Within a (segment, term): doc ids are delta-gap + varbyte encoded in
   blocks of ``BLOCK`` docs with per-block metadata (first/last doc,
-  max_tf, min_dl). The block-max WAND impact bound is derived at query
+  max_tf, min_dl). A block-max impact bound can be derived at query
   time as ``idf · tf_w(max_tf, min_dl, avgdl)`` — a valid upper bound
   because the BM25 tf-weight is increasing in tf and decreasing in dl.
   Storing (max_tf, min_dl) instead of a precomputed weight keeps the
@@ -115,11 +115,6 @@ def tf_weight(tf, dl_q, avgdl: float):
     tf = np.asarray(tf, dtype=np.float64)
     dl = np.asarray(dl_q, dtype=np.float64)
     return tf / (tf + K1 * (1.0 - B + B * dl / avgdl))
-
-
-def block_bound_w(max_tf, min_dl, avgdl: float) -> float:
-    """Query-time per-block tf-weight upper bound."""
-    return float(tf_weight(max_tf, min_dl, avgdl))
 
 
 def _encode_term_blocks(

@@ -8,19 +8,22 @@ and a shuffle-partition count that callers override per data size.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("ALIX_SHUFFLE_PARTITIONS", "32"))
 # Scan-split parallelism floor. Spark's default is the session's core
 # count, which shreds small index tables (a 4 MB postings parquet) into
 # one split per file purely to satisfy the floor — every downstream job
-# then pays per-task overhead with no bytes to amortize it. "1" lets
-# byte-based sizing rule (maxPartitionBytes still caps splits at 128 MB,
-# so large tables split exactly as before); override per deployment when
-# a scan feeds a CPU-heavy map that needs more tasks than byte sizing
-# gives.
+# then pays per-task overhead with no bytes to amortize it. "4" keeps a
+# small floor of parallel scan tasks for the CPU-heavy maps a scan feeds
+# without splitting small tables per core (maxPartitionBytes still caps
+# splits at 128 MB, so large tables split exactly as before); override
+# per deployment.
 DEFAULT_MIN_PARTITION_NUM = os.environ.get("ALIX_MIN_PARTITION_NUM", "4")
 # Driver JVM heap. In local mode the driver IS the executor: the Spark
 # default of 1g left 32 concurrent tasks sharing ~430 MB of unified
@@ -125,4 +128,6 @@ def _warm_python_workers(spark: SparkSession) -> None:
             .count()
         )
     except Exception:
-        pass  # warmup is best-effort, never a session failure
+        # warmup is best-effort, never a session failure — but say why
+        # the first query of this session will pay the cold start
+        log.warning("Python worker warm-up failed", exc_info=True)

@@ -70,7 +70,16 @@ def test_boolean_docs_match_corpus_path(q, corpus, persisted):
 
 
 @pytest.mark.parametrize(
-    "q", ["+fast join merge", "fast -window", "+fast +join"]
+    "q",
+    [
+        "+fast join merge",
+        "fast -window",
+        "+fast +join",
+        "-fast -join",  # pure negative
+        "+fast +zzzyx",  # a MUST term absent from the index
+        "+fast win*",
+        "+fast fast join",  # a MUST term repeated as SHOULD
+    ],
 )
 def test_boolean_search_scores_match_corpus_lucene(q, corpus, persisted):
     exp = corpus.search(q, k=10, lucene=True).collect()
