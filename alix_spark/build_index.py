@@ -10,13 +10,16 @@ Usage:
 Stages (each a parquet checkpoint + lineage record, skipped on resume):
     docs      — docId assignment (dense rank over (repo, path)) + sha256
                 ingest-invariant check (build FAILS on violation)
-    postings  — (term, doc_id, tf, positions)
-    doc_lens  — (doc_id, dl)
-    forms     — freq-ordered vocabulary (form_id, term, occs, docs)
     offsets   — (doc_id, pos, start, end, term) char offsets for render ops
     segments0 — compressed per-range posting segments (bucket-partitioned)
-    norms0    — per-segment 1-byte norms
+                from ONE raw-docs shuffle; norm rows ride in bucket -1
+    norms0    — per-segment 1-byte norms (the bucket -1 partition)
+    forms     — freq-ordered vocabulary (form_id, term, occs, docs), summed
+                from segments0's block metadata
     segmentsK/normsK — tree-merge rounds (Lucene-style background merges)
+
+``_meta`` takes n_docs_with_tokens and avgdl from norms0. The corpus is
+read twice: once for the index (segments0) and once for offsets.
 
 The final segment/norm tables + forms are everything the ranked query path
 needs (see alix_spark.search.wand / alix_spark.index.reader).
@@ -34,13 +37,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main(argv: list[str] | None = None) -> int:
+    from alix_spark.index import segments as seg_mod
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="parquet path of the docs table")
     ap.add_argument("--synth", type=int, help="synthesize N docs instead")
     ap.add_argument("--out", required=True, help="index output directory")
     ap.add_argument("--text-col", default="content")
-    ap.add_argument("--seg-size", type=int, default=8192)
-    ap.add_argument("--buckets", type=int, default=32)
+    ap.add_argument("--seg-size", type=int, default=seg_mod.DEFAULT_SEG_SIZE)
+    ap.add_argument("--buckets", type=int, default=seg_mod.DEFAULT_BUCKETS)
     ap.add_argument("--merge-rounds", type=int, default=2)
     ap.add_argument("--merge-group", type=int, default=2)
     ap.add_argument("--master", default=None)
@@ -52,7 +57,6 @@ def main(argv: list[str] | None = None) -> int:
     from alix_spark import get_spark, ingest
     from alix_spark.analysis import simple
     from alix_spark.index import build as ib
-    from alix_spark.index import segments as seg_mod
     from alix_spark.index.lineage import BuildContext
 
     spark = get_spark(app_name="alix-build-index", master=args.master)
@@ -85,17 +89,6 @@ def main(argv: list[str] | None = None) -> int:
     docs = ctx.run_stage("docs", fp, build_docs)
     n_docs_total = docs.count()
 
-    tokens = simple.tokenize(docs, "doc_id", args.text_col)
-
-    postings = ctx.run_stage("postings", fp, lambda: ib.build_postings(tokens))
-    # doc_lens and forms both derive from the materialized postings
-    # stage (dl = Σ tf): one corpus tokenize+shuffle feeds all three
-    # tables instead of paying a second pass for lengths
-    doc_lens = ctx.run_stage(
-        "doc_lens", fp, lambda: ib.build_doc_lens_from_postings(postings)
-    )
-    ctx.run_stage("forms", fp, lambda: ib.build_forms(postings))
-
     # offsets — term vectors with positions AND offsets, persisted so
     # render ops (KWIC/hilite/paint) never re-tokenize the corpus
     # (reference: Alix.java:154-165). Doc-id-sorted within files so a
@@ -107,10 +100,6 @@ def main(argv: list[str] | None = None) -> int:
         .repartitionByRange(args.buckets, F.col("doc_id"))
         .sortWithinPartitions("doc_id", "pos"),
     )
-
-    from alix_spark.search.bm25 import corpus_stats
-
-    n_docs, avgdl = corpus_stats(doc_lens)
 
     # segments0 is the SINGLE-PASS build shuffling raw documents (the
     # kernel tokenizes, counts, encodes postings+positions AND emits the
@@ -131,6 +120,13 @@ def main(argv: list[str] | None = None) -> int:
     segs, norms_view = seg_mod.split_single_pass(unioned)
     # norms0 reads ONLY the bucket=-1 partition dir (partition pruning)
     norms = ctx.run_stage("norms0", fp, lambda: norms_view)
+    # vocabulary and corpus stats read back from the index itself
+    # (occs = Σ sum_tf, docs = Σ n; avgdl from the norms' sum_dl and
+    # nonzero norm bytes), never from another pass over the corpus
+    ctx.run_stage(
+        "forms", fp, lambda: ib.rank_forms(seg_mod.forms_from_segments(segs))
+    )
+    n_docs, avgdl = seg_mod.corpus_stats_from_norms(norms)
 
     seg_size = args.seg_size
     for r in range(1, args.merge_rounds + 1):

@@ -1,5 +1,12 @@
 """Compressed posting segments + tree-structured merge.
 
+One builder, :func:`build_single_pass_from_docs`, writes every segment:
+one shuffle of raw documents by segment, a numpy kernel per segment that
+tokenizes, counts and encodes postings, positions and norms. The
+vocabulary (:func:`forms_from_segments`) and the corpus stats
+(:func:`corpus_stats_from_norms`) are read back from its output, never
+from a second pass over the corpus.
+
 Design (Lucene-shaped, Spark-native — see SURVEY.md §4.3/§7):
 
 * A **segment** covers a contiguous docId range: ``seg_id = doc_id //
@@ -40,7 +47,9 @@ Schema of the postings-segment table (one row per term-block):
     min_dl: long       -- query-time impact bound input (quantized len)
     sum_tf: long       -- block tf total (forms table derives from this)
     positions: binary  -- varbyte(per-doc delta(positions)), tf values per
-                          posting; b"" when built without positions
+                          posting; b"" only in positions-free segments
+                          written by older builds (decode and merge
+                          still recognise them)
 
 Positions (the reference's DOCS_AND_FREQS_AND_POSITIONS,
 ``/root/reference/java/alix/lucene/Alix.java:154-165``): each posting's
@@ -70,6 +79,7 @@ from pyspark.sql.types import (
 )
 
 from alix_spark.index import codec
+from alix_spark.index.xxhash import term_bucket
 from alix_spark.search.bm25 import B, K1
 
 BLOCK = 128
@@ -129,7 +139,8 @@ def _encode_term_blocks(
     """One term's postings (sorted by doc) → block rows.
 
     ``pos_deltas``: occurrence-aligned per-doc delta-encoded positions
-    (length == tfs.sum()); None builds a positions-free segment.
+    (length == tfs.sum()); None re-encodes a positions-free segment (the
+    merge of segments written without positions).
     """
     rows = []
     occ_bounds = None
@@ -166,85 +177,18 @@ def _encode_term_blocks(
     return rows
 
 
-def build_segments(
-    postings: DataFrame,
-    doc_lens: DataFrame,
-    seg_size: int = DEFAULT_SEG_SIZE,
-    n_buckets: int = DEFAULT_BUCKETS,
-) -> DataFrame:
-    """Two-stage path: uncompressed postings (term, doc_id, tf) →
-    compressed segment rows. Grouped by (seg_id, bucket): group size ≈
-    (postings in segment)/n_buckets — bounded for any term skew; per-group
-    Spark/Arrow overhead amortized over ~vocab/n_buckets terms.
-    """
-    from alix_spark.search.bm25 import with_quantized_dl
-
-    dlq = with_quantized_dl(doc_lens).withColumnRenamed("dl", "dl_q")
-    p = (
-        postings.select("term", "doc_id", "tf")
-        .join(dlq, "doc_id")
-        .withColumn("seg_id", (F.col("doc_id") / seg_size).cast("long"))
-        .withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-        )
-    )
-
-    def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg_id = int(pdf["seg_id"].iloc[0])
-        bucket = int(pdf["bucket"].iloc[0])
-        pdf = pdf.sort_values(["term", "doc_id"])
-        rows = []
-        terms = pdf["term"].to_numpy()
-        docs = pdf["doc_id"].to_numpy(np.uint64)
-        tfs = pdf["tf"].to_numpy(np.int64)
-        dlq_arr = pdf["dl_q"].to_numpy(np.int64)
-        change = np.flatnonzero(terms[1:] != terms[:-1]) + 1
-        starts = np.concatenate(([0], change))
-        ends = np.concatenate((change, [len(terms)]))
-        for s, e in zip(starts, ends):
-            rows.extend(
-                _encode_term_blocks(
-                    terms[s], bucket, seg_id, docs[s:e], tfs[s:e], dlq_arr[s:e]
-                )
-            )
-        return pd.DataFrame(rows, columns=[f.name for f in SEGMENT_SCHEMA.fields])
-
-    return p.groupBy("seg_id", "bucket").applyInPandas(encode_group, SEGMENT_SCHEMA)
-
-
-def build_norms(doc_lens: DataFrame, seg_size: int = DEFAULT_SEG_SIZE) -> DataFrame:
-    """doc_lens → per-segment norm-byte arrays (1 byte/doc, Lucene
-    layout). Docs with no tokens get norm byte 0."""
-
-    def encode_seg(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg_id = int(pdf["seg_id"].iloc[0])
-        first = seg_id * seg_size
-        dls = pdf["dl"].to_numpy(np.int64)
-        offs = (pdf["doc_id"].to_numpy(np.int64) - first).astype(np.int64)
-        arr = np.zeros(int(offs.max()) + 1, dtype=np.uint8)
-        arr[offs] = codec.int_to_byte4(dls)
-        return pd.DataFrame(
-            [(seg_id, first, int(arr.size), int(dls.sum()), arr.tobytes())],
-            columns=[f.name for f in NORMS_SCHEMA.fields],
-        )
-
-    return (
-        doc_lens.withColumn("seg_id", (F.col("doc_id") / seg_size).cast("long"))
-        .groupBy("seg_id")
-        .applyInPandas(encode_seg, NORMS_SCHEMA)
-    )
-
-
 def _encode_segment_tokens(
     seg_id: int,
-    tok_pdf: pd.DataFrame,
+    doc_ids: np.ndarray,
+    terms: np.ndarray,
+    pos: np.ndarray,
     n_buckets: int,
     seg_size: int,
-    term_bucket_fn,
-) -> tuple[list[tuple], tuple]:
-    """Shared kernel: one segment's (doc_id, term) rows → (block rows,
-    norm row). Computes per-doc lengths locally (a doc lives in exactly
-    one segment, so the group sees all its tokens).
+) -> list[tuple]:
+    """Segment kernel: one segment's token occurrences (aligned doc_id /
+    term / pos arrays) → its block rows plus one norm marker row.
+    Computes per-doc lengths locally (a doc lives in exactly one
+    segment, so the group sees all its tokens).
 
     Pure numpy (factorize + lexsort + run-length) instead of pandas
     groupby: ~2× less memory traffic, which matters both for absolute
@@ -252,36 +196,28 @@ def _encode_segment_tokens(
     before it is CPU-bound).
     """
     first = seg_id * seg_size
-    codes, uniques = pd.factorize(tok_pdf["term"].to_numpy(), sort=True)
-    docs_raw = tok_pdf["doc_id"].to_numpy(np.int64)
-    has_pos = "pos" in tok_pdf.columns
-    pos_raw = tok_pdf["pos"].to_numpy(np.int64) if has_pos else None
+    codes, uniques = pd.factorize(terms, sort=True)
 
     # per-doc exact lengths -> norm bytes -> quantized lengths
-    dl_counts = np.bincount(docs_raw - first)
+    dl_counts = np.bincount(doc_ids - first)
     present = dl_counts > 0
     arr = np.zeros(dl_counts.size, dtype=np.uint8)
     arr[present] = codec.int_to_byte4(dl_counts[present])
     dl_all = codec.byte4_to_int(arr)
-    norm_row = (
-        seg_id,
-        first,
-        int(arr.size),
-        int(dl_counts.sum()),
-        arr.tobytes(),
-    )
+    # norm rows live in bucket -1 (own partition dir): norm bytes in
+    # doc_gaps, n_docs in n, sum_dl in min_dl
+    rows = [
+        (-1, seg_id, NORM_MARKER, 0, int(arr.size), arr.tobytes(), b"",
+         first, first + int(arr.size) - 1, 0, int(dl_counts.sum()), 0, b"")
+    ]
+    if codes.size == 0:
+        return rows
 
     # (term, doc) run-length counts over the lexsorted triples; positions
     # sort last so each run's occurrences come out position-ordered
-    order = (
-        np.lexsort((pos_raw, docs_raw, codes))
-        if has_pos
-        else np.lexsort((docs_raw, codes))
-    )
+    order = np.lexsort((pos, doc_ids, codes))
     c = codes[order]
-    d = docs_raw[order]
-    if c.size == 0:
-        return [], norm_row
+    d = doc_ids[order]
     is_new = np.empty(c.size, dtype=bool)
     is_new[0] = True
     is_new[1:] = (c[1:] != c[:-1]) | (d[1:] != d[:-1])
@@ -291,94 +227,33 @@ def _encode_segment_tokens(
     gd = d[starts_rl].astype(np.uint64)
     dl_q = dl_all[(gd.astype(np.int64) - first)]
 
-    pos_deltas = None
-    occ_bounds = None
-    if has_pos:
-        # per-run delta encoding: first position absolute, then gaps —
-        # one vectorized diff with the run starts reset to absolutes
-        p = pos_raw[order].astype(np.int64)
-        deltas = np.empty_like(p)
-        deltas[0] = p[0]
-        deltas[1:] = p[1:] - p[:-1]
-        deltas[starts_rl] = p[starts_rl]
-        pos_deltas = deltas.astype(np.uint64)
-        occ_bounds = np.concatenate(([0], np.cumsum(tfs)))
+    # per-run delta encoding: first position absolute, then gaps — one
+    # vectorized diff with the run starts reset to absolutes
+    p = pos[order]
+    deltas = np.empty_like(p)
+    deltas[0] = p[0]
+    deltas[1:] = p[1:] - p[:-1]
+    deltas[starts_rl] = p[starts_rl]
+    pos_deltas = deltas.astype(np.uint64)
+    occ_bounds = np.concatenate(([0], np.cumsum(tfs)))
 
     change = np.flatnonzero(gc[1:] != gc[:-1]) + 1
     t_starts = np.concatenate(([0], change))
     t_ends = np.concatenate((change, [gc.size]))
-    rows = []
     for s, e in zip(t_starts, t_ends):
         term = uniques[gc[s]]
         rows.extend(
             _encode_term_blocks(
                 term,
-                term_bucket_fn(term, n_buckets),
+                term_bucket(term, n_buckets),
                 seg_id,
                 gd[s:e],
                 tfs[s:e],
                 dl_q[s:e],
-                None
-                if pos_deltas is None
-                else pos_deltas[occ_bounds[s] : occ_bounds[e]],
+                pos_deltas[occ_bounds[s] : occ_bounds[e]],
             )
         )
-    return rows, norm_row
-
-
-def build_single_pass(
-    tokens: DataFrame,
-    seg_size: int = DEFAULT_SEG_SIZE,
-    n_buckets: int = DEFAULT_BUCKETS,
-) -> DataFrame:
-    """ONE-shuffle index build: the token stream grouped by segment; each
-    kernel computes tf + doc lengths + norms locally and emits block rows
-    PLUS one norm marker row (term == NORM_MARKER, norm bytes in
-    ``doc_gaps``, sum_dl in ``min_dl``, n_docs in ``n``).
-
-    Split the output with :func:`split_single_pass`; derive the forms
-    table with :func:`forms_from_segments`. No corpus-global statistic is
-    read or written by the kernel — this is the maximally-scalable build
-    (everything after the one shuffle is embarrassingly parallel).
-    """
-    from alix_spark.index.xxhash import term_bucket
-
-    cols_in = ["doc_id", "term"] + (
-        ["pos"] if "pos" in tokens.columns else []
-    )
-    t = tokens.select(*cols_in).withColumn(
-        "seg_id", (F.col("doc_id") / seg_size).cast("long")
-    )
-
-    def encode_seg(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = [f.name for f in SEGMENT_SCHEMA.fields]
-        if pdf.empty:
-            return pd.DataFrame({c: pd.Series(dtype=object) for c in cols})
-        seg_id = int(pdf["seg_id"].iloc[0])
-        rows, norm = _encode_segment_tokens(
-            seg_id, pdf, n_buckets, seg_size, term_bucket
-        )
-        seg_id_, first, n_docs, sum_dl, norm_bytes = norm
-        rows.append(
-            (
-                -1,  # norm rows live in bucket -1 (own partition dir)
-                seg_id_,
-                NORM_MARKER,
-                0,
-                n_docs,
-                norm_bytes,
-                b"",
-                first,
-                first + n_docs - 1,
-                0,
-                sum_dl,
-                0,
-                b"",
-            )
-        )
-        return pd.DataFrame(rows, columns=cols)
-
-    return t.groupBy("seg_id").applyInPandas(encode_seg, SEGMENT_SCHEMA)
+    return rows
 
 
 def build_single_pass_from_docs(
@@ -387,23 +262,22 @@ def build_single_pass_from_docs(
     seg_size: int = DEFAULT_SEG_SIZE,
     n_buckets: int = DEFAULT_BUCKETS,
 ) -> DataFrame:
-    """Single-pass build that shuffles RAW DOCUMENTS, not exploded tokens.
+    """The index build: ONE shuffle of raw ``(doc_id, text)`` rows,
+    grouped by segment. Each kernel tokenizes its documents inside the
+    Arrow batch (the simple chain's regex, C-speed per document; never
+    an exploded token table, which would be ~4× the corpus bytes),
+    computes tf + doc lengths + norms locally and emits the block rows
+    PLUS one norm marker row (term == NORM_MARKER, bucket -1, norm bytes
+    in ``doc_gaps``, sum_dl in ``min_dl``, n_docs in ``n``).
 
-    The one exchange of :func:`build_single_pass` carries the token table
-    — ~4× the corpus bytes (one ~25-byte row per occurrence). Here the
-    groupBy(seg_id) shuffles ``(doc_id, text)`` instead — corpus-sized —
-    and the kernel tokenizes inside the Arrow batch (C-speed regex per
-    document, never per-row Python semantics: the whole batch is one
-    pandas pass). Same output as ``build_single_pass`` over
-    ``simple.tokenize`` (property-tested), with the shuffle shrunk to the
-    theoretical minimum for a doc-range-partitioned index.
-
-    Use this for the simple analysis chain; the French chain keeps the
-    token-table path (its kernel already produced the tokens).
+    Split the output with :func:`split_single_pass`; derive the forms
+    table with :func:`forms_from_segments` and corpus stats with
+    :func:`corpus_stats_from_norms`. No corpus-global statistic is read
+    or written by the kernel, so everything after the one shuffle is
+    embarrassingly parallel. A segment whose documents have no tokens
+    still emits its (empty) norm row.
     """
     import re as _re
-
-    from alix_spark.index.xxhash import term_bucket
 
     t = docs.select(
         F.col("doc_id"), F.col(text_col).alias("_text")
@@ -414,38 +288,21 @@ def build_single_pass_from_docs(
         cols = [f.name for f in SEGMENT_SCHEMA.fields]
         if pdf.empty:
             return pd.DataFrame({c: pd.Series(dtype=object) for c in cols})
-        seg_id = int(pdf["seg_id"].iloc[0])
-        doc_arrs, term_arrs, pos_arrs = [], [], []
-        for doc_id, text in zip(pdf["doc_id"], pdf["_text"]):
+        terms, lens = [], []
+        for text in pdf["_text"]:
             toks = tok_re.findall((text or "").lower())
-            if not toks:
-                continue
-            n = len(toks)
-            doc_arrs.append(np.full(n, int(doc_id), dtype=np.int64))
-            term_arrs.extend(toks)
-            pos_arrs.append(np.arange(n, dtype=np.int64))
-        if not doc_arrs:
-            # keep the norm row so empty-doc segments stay represented
-            first = seg_id * seg_size
-            return pd.DataFrame(
-                [(-1, seg_id, NORM_MARKER, 0, 0, b"", b"", first, first - 1,
-                  0, 0, 0, b"")],
-                columns=cols,
-            )
-        tok_pdf = pd.DataFrame(
-            {
-                "doc_id": np.concatenate(doc_arrs),
-                "term": np.asarray(term_arrs, dtype=object),
-                "pos": np.concatenate(pos_arrs),
-            }
-        )
-        rows, norm = _encode_segment_tokens(
-            seg_id, tok_pdf, n_buckets, seg_size, term_bucket
-        )
-        seg_id_, first, n_docs, sum_dl, norm_bytes = norm
-        rows.append(
-            (-1, seg_id_, NORM_MARKER, 0, n_docs, norm_bytes, b"", first,
-             first + n_docs - 1, 0, sum_dl, 0, b"")
+            terms.extend(toks)
+            lens.append(len(toks))
+        lens = np.asarray(lens, dtype=np.int64)
+        doc_starts = np.cumsum(lens) - lens
+        rows = _encode_segment_tokens(
+            int(pdf["seg_id"].iloc[0]),
+            np.repeat(pdf["doc_id"].to_numpy(np.int64), lens),
+            np.asarray(terms, dtype=object),
+            np.arange(int(lens.sum()), dtype=np.int64)
+            - np.repeat(doc_starts, lens),
+            n_buckets,
+            seg_size,
         )
         return pd.DataFrame(rows, columns=cols)
 
@@ -505,41 +362,6 @@ def forms_from_segments(segments: DataFrame) -> DataFrame:
     return segments.groupBy("term").agg(
         F.sum("sum_tf").cast("long").alias("occs"),
         F.sum("n").cast("long").alias("docs"),
-    )
-
-
-def build_segments_direct(
-    tokens: DataFrame,
-    norms: DataFrame,
-    seg_size: int = DEFAULT_SEG_SIZE,
-    n_buckets: int = DEFAULT_BUCKETS,
-) -> DataFrame:
-    """Single-shuffle build against precomputed norms (kept for
-    compatibility; `build_single_pass` subsumes it). Row-identical to
-    the two-stage path (property-tested)."""
-    from alix_spark.index.xxhash import term_bucket
-
-    cols_in = ["doc_id", "term"] + (
-        ["pos"] if "pos" in tokens.columns else []
-    )
-    t = tokens.select(*cols_in).withColumn(
-        "seg_id", (F.col("doc_id") / seg_size).cast("long")
-    )
-
-    def encode_seg(key, tok_pdf: pd.DataFrame, norm_pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = [f.name for f in SEGMENT_SCHEMA.fields]
-        if tok_pdf.empty or norm_pdf.empty:
-            return pd.DataFrame({c: pd.Series(dtype=object) for c in cols})
-        (seg_id,) = key
-        rows, _ = _encode_segment_tokens(
-            int(seg_id), tok_pdf, n_buckets, seg_size, term_bucket
-        )
-        return pd.DataFrame(rows, columns=cols)
-
-    return (
-        t.groupby("seg_id")
-        .cogroup(norms.groupby("seg_id"))
-        .applyInPandas(encode_seg, SEGMENT_SCHEMA)
     )
 
 

@@ -134,3 +134,29 @@ def test_synth_corpus_deterministic(spark):
     da = ingest.assign_doc_ids(a).select("repo", "path", "doc_id").collect()
     db = ingest.assign_doc_ids(b).select("repo", "path", "doc_id").collect()
     assert sorted(map(tuple, da)) == sorted(map(tuple, db))
+
+
+def test_build_shape_single_pass(spark, built_index):
+    """The CLI reads the corpus for the index once: no postings or
+    doc_lens stage; forms and the _meta corpus stats come from the
+    segments and norms, and equal the declarative groupBy tables."""
+    from alix_spark import Corpus
+    from alix_spark.search.bm25 import corpus_stats
+
+    out = Path(built_index)
+    assert set(_lineage_ts(built_index)) == {
+        "docs", "offsets", "segments0", "norms0", "forms", "segments1",
+        "norms1",
+    }
+    c = Corpus(spark.read.parquet(f"{SF_SMOKE}/documents.parquet"))
+    cols = ["form_id", "term", "occs", "docs"]
+    got = sorted(
+        tuple(r) for r in spark.read.parquet(str(out / "forms"))
+        .select(*cols).collect()
+    )
+    exp = sorted(tuple(r) for r in c.forms.select(*cols).collect())
+    assert got == exp
+    meta = spark.read.json(str(out / "_meta")).collect()[0]
+    assert (meta["n_docs_with_tokens"], meta["avgdl"]) == corpus_stats(
+        c.doc_lens
+    )

@@ -30,15 +30,20 @@ def ctx(spark):
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     c = Corpus(docs)
     n, avgdl = bm25_mod.corpus_stats(c.doc_lens)
-    segs = seg_mod.build_segments(
-        c.postings, c.doc_lens, seg_size=SEG_SIZE
-    ).cache()
-    norms = seg_mod.build_norms(c.doc_lens, seg_size=SEG_SIZE).cache()
+    segs, norms = seg_mod.split_single_pass(_build(docs, SEG_SIZE))
+    segs = segs.cache()
+    norms = norms.cache()
     dfs = {
         r["term"]: int(r["docs"])
         for r in c.forms.select("term", "docs").collect()
     }
     return c, segs, norms, n, avgdl, dfs
+
+
+def _build(docs, seg_size):
+    return seg_mod.build_single_pass_from_docs(
+        docs.select("doc_id", "text"), text_col="text", seg_size=seg_size
+    )
 
 
 def _decode_all(segs_pdf: pd.DataFrame) -> dict:
@@ -77,9 +82,7 @@ def test_merge_tree_equals_direct_build(ctx):
     c, segs, norms, n, avgdl, _ = ctx
     m1, n1 = seg_mod.merge_segments(segs, norms, group=2)
     m2, n2 = seg_mod.merge_segments(m1, n1, group=2)
-    direct = seg_mod.build_segments(
-        c.postings, c.doc_lens, seg_size=SEG_SIZE * 4
-    )
+    direct, _ = seg_mod.split_single_pass(_build(c.docs, SEG_SIZE * 4))
     merged_pdf = m2.toPandas().sort_values(["term", "seg_id", "block_id"])
     direct_pdf = direct.toPandas().sort_values(["term", "seg_id", "block_id"])
     assert len(merged_pdf) == len(direct_pdf)
