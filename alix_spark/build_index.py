@@ -49,7 +49,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--merge-rounds", type=int, default=2)
     ap.add_argument("--merge-group", type=int, default=2)
     ap.add_argument("--master", default=None)
-    ap.add_argument("--cpus", default=None)
     args = ap.parse_args(argv)
 
     from pyspark.sql import functions as F

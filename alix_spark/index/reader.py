@@ -149,11 +149,14 @@ class IndexReader:
     ) -> "IndexReader":
         """Open the CURRENT version of a streaming (manifest-versioned)
         index — the same query surface over a live
-        :class:`alix_spark.streaming.StreamingIndexer` directory. The
-        snapshot is pinned at open time (the manifest's file groups are
-        immutable), so concurrent publishes never change what this
-        reader sees — the reference's lazy ``Alix.reader()`` singleton
-        semantics (``Alix.java:298-344``) without any lock.
+        :class:`alix_spark.streaming.StreamingIndexer` directory. ONE
+        read of ``CURRENT`` pins the snapshot: the version, the layout
+        (seg_size, n_buckets) and every table come from the manifest
+        that read names, whose file groups are immutable — so a publish
+        landing during the open or after it never changes what this
+        reader sees. The reference's lazy ``Alix.reader()`` singleton
+        semantics (``Alix.java:298-344``) without any lock. A directory
+        without ``CURRENT`` raises FileNotFoundError; nothing is created.
 
         Retention bound: the pin holds only while the opened version is
         within the indexer's ``retain_versions`` window — once
@@ -163,21 +166,23 @@ class IndexReader:
         many publishes should re-open (or the stream should be run with
         a ``retain_versions`` ≥ the maximum reader age in versions).
         """
-        from alix_spark.streaming import StreamingIndexer
+        from alix_spark import streaming
+        from alix_spark.index import segments as seg_mod
 
-        ix = StreamingIndexer(spark, index_dir)
-        docs, segments, norms = ix.load_tables()
+        # the one pointer read: everything below comes from its manifest
+        snap = streaming.read_manifest(index_dir, streaming.read_version(index_dir))
+        docs, segments, norms = streaming.snapshot_tables(spark, index_dir, snap)
         self = cls.from_tables(
             spark,
             segments,
             norms,
             docs=docs,
-            n_buckets=ix.current_n_buckets(),
+            n_buckets=int(snap.get("n_buckets", seg_mod.DEFAULT_BUCKETS)),
         )
         self.index_dir = index_dir
         self.meta = {
-            "version": ix.current_version(),
-            "seg_size_final": ix.current_seg_size(),
+            "version": snap["version"],
+            "seg_size_final": int(snap.get("seg_size", seg_mod.DEFAULT_SEG_SIZE)),
         }
         return self
 

@@ -34,18 +34,6 @@ from pyspark.sql import functions as F
 from alix_spark.index import segments as seg_mod
 
 
-def split_changes(
-    docs_old: DataFrame, changed: DataFrame, key: tuple[str, str] = ("repo", "path")
-) -> tuple[DataFrame, DataFrame]:
-    """Partition the changed rows into (updates, inserts) by whether the
-    (repo, path) key already exists; updates carry the OLD doc_id."""
-    k = list(key)
-    old_ids = docs_old.select(*k, "doc_id")
-    updates = changed.join(old_ids, k, "inner")
-    inserts = changed.join(old_ids.select(*k), k, "left_anti")
-    return updates, inserts
-
-
 def seg_range_pred(affected: list[int], seg_size: int):
     """Pushdown-friendly predicate selecting the docs of the affected
     docId-range segments: an OR of plain ``doc_id`` range comparisons
@@ -89,9 +77,9 @@ def incremental_update(
 
     # ONE left join classifies every changed row (doc_id null = insert)
     # and feeds both the updates table and the affected-segment
-    # aggregate below — the split_changes 2-join formulation plus a
-    # distinct-collect of touched_ids cost three extra driver jobs per
-    # update (guide §1.2: the distributed algorithm first)
+    # aggregate below — an inner join for updates plus an anti join for
+    # inserts and a distinct-collect of touched ids would cost three
+    # extra driver jobs per update
     old_ids = docs_old.select(*k, "doc_id")
     j = changed.join(old_ids, k, "left").cache()
     updates = j.filter(F.col("doc_id").isNotNull())

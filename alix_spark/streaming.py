@@ -1,10 +1,9 @@
 """Structured Streaming ingest: micro-batch MERGE into the live index.
 
 The reference is batch-only with an atomic directory swap at the end of
-each load (``/root/reference/java/alix/cli/Load.java:157-165``) and
-delete-then-reinsert per source file
-(``/root/reference/java/alix/lucene/SAXIndexer.java:133-137``). This
-module is the streaming generalization a 100 TB pipeline needs: a
+each load (the reference's ``cli/Load.java:157-165``) and
+delete-then-reinsert per source file (``lucene/SAXIndexer.java:133-137``).
+This module is the streaming generalization a 100 TB pipeline needs: a
 ``readStream`` of changed documents drives ``foreachBatch``, each
 micro-batch MERGEs by (repo, path) through
 :func:`alix_spark.index.update.incremental_update` (only touched
@@ -14,20 +13,29 @@ complete, consistent version.
 
 Scale discipline (the Iceberg-snapshot idea): a version is a MANIFEST,
 not a copy. Table data lives in per-segment file groups written once and
-shared by reference across versions::
+shared by reference across versions, and the manifest is itself a
+manifest-list of per-seg-range shard files::
 
-    <index_dir>/data/gen=<G>/<table>/seg=<id>/  # immutable file groups
-    <index_dir>/v<N>.json      # manifest: seg_id -> file-group path
-    <index_dir>/CURRENT        # pointer file (atomic rename)
+    <index_dir>/data/gen=<G>/<table>/seg=<id>/    # immutable file groups
+    <index_dir>/mdata/shard-<table>-<i>-v<N>.json # seg_id -> file group,
+                                                  # SEGS_PER_SHARD segs each
+    <index_dir>/v<N>.json    # manifest: seg_size, n_buckets, shard list
+    <index_dir>/CURRENT      # pointer file (atomic rename)
 
 ``process_batch`` writes ONLY the affected segments' file groups (one
-``partitionBy`` job per table) and the new manifest re-references every
-untouched segment's existing files — so a 50-doc micro-batch into a
-100 TB index costs O(touched segments) of write IO, matching the
-O(touched) compute of ``incremental_update``. Superseded versions are
-garbage-collected after publish (retain-last-K), deleting only file
-groups no retained manifest references — a reader of any retained
-version is never broken mid-GC.
+``partitionBy`` job per table) and ONLY the shard files whose range
+holds an affected segment; every untouched file group and shard is
+re-referenced — so a 50-doc micro-batch into a 100 TB index costs
+O(touched segments) of write IO, matching the O(touched) compute of
+``incremental_update``. Superseded versions are garbage-collected after
+publish (retain-last-K), deleting only file groups and shards no
+retained manifest references — a reader of any retained version is
+never broken mid-GC.
+
+Every operation reads ``CURRENT`` once and resolves the manifest it
+names into one *snapshot* dict (``version``, ``seg_size``,
+``n_buckets``, ``tables``: table -> {seg_id(str) -> file-group path}),
+so a publish landing mid-operation cannot mix two versions.
 """
 
 from __future__ import annotations
@@ -49,20 +57,68 @@ DOCS_SCHEMA = (
 )
 
 TABLES = ("docs", "segments", "norms")
+SCHEMAS = {
+    "docs": DOCS_SCHEMA,
+    "segments": seg_mod.SEGMENT_SCHEMA,
+    "norms": seg_mod.NORMS_SCHEMA,
+}
 
-# Auto-sharding policy: a default-constructed indexer starts with the
-# cheap inline manifest and switches to the sharded manifest-list the
-# first time a version would carry more than AUTO_SHARD_THRESHOLD
-# segment entries — so a long-lived stream never walks into the
-# ~10^6-entry inline-manifest horizon (the Iceberg analogue shards
-# always; we defer the extra files until they pay for themselves).
-AUTO_SEGS_PER_SHARD = 256
-AUTO_SHARD_THRESHOLD = 4 * AUTO_SEGS_PER_SHARD
+# Segments per manifest shard. Recorded in every manifest: a shard file
+# is carried by reference only while the recorded span equals this one,
+# so shard boundaries agree across versions.
+SEGS_PER_SHARD = 256
+
+
+def _manifest_path(index_dir: str, version: int) -> Path:
+    return Path(index_dir) / f"v{version}.json"
+
+
+def read_version(index_dir: str) -> int:
+    """The version ``CURRENT`` points at. Raises FileNotFoundError when
+    the directory holds no published version."""
+    p = Path(index_dir) / "CURRENT"
+    if not p.exists():
+        raise FileNotFoundError(f"no streaming index at {index_dir}: {p} is missing")
+    return int(json.loads(p.read_text())["version"])
+
+
+def read_manifest(index_dir: str, version: int) -> dict:
+    """Version ``version``'s manifest with ``tables`` resolved. Inline
+    manifests written by older releases carry ``tables`` themselves;
+    manifest-lists are resolved from their shard files."""
+    man = json.loads(_manifest_path(index_dir, version).read_text())
+    if "shards" in man:
+        tables: dict = {t: {} for t in TABLES}
+        for t, shard_map in man["shards"].items():
+            for rel in shard_map.values():
+                tables[t].update(json.loads((Path(index_dir) / rel).read_text()))
+        man["tables"] = tables
+    return man
+
+
+def snapshot_tables(
+    spark: SparkSession, index_dir: str, snap: dict
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(docs, segments, norms) of ``snap``; empty frames with the right
+    schemas for an empty table. Each table is a single multi-path
+    parquet scan over exactly the file groups its manifest references —
+    no version-copy is ever materialized."""
+    out = []
+    for t in TABLES:
+        paths = [f"{index_dir}/{rel}" for rel in snap["tables"][t].values()]
+        if paths:
+            out.append(spark.read.parquet(*paths))
+        else:
+            out.append(spark.createDataFrame([], SCHEMAS[t]))
+    return tuple(out)
 
 
 class StreamingIndexer:
     """foreachBatch sink maintaining a versioned, atomically-published
-    inverted index with manifest-based (O(touched-segments)) persistence."""
+    inverted index with sharded-manifest (O(touched-segments))
+    persistence. The id assignment of a batch persists its
+    range-shuffled partitions; they are dead weight once the version is
+    published, so each publish clears the session cache."""
 
     def __init__(
         self,
@@ -72,8 +128,6 @@ class StreamingIndexer:
         n_buckets: int = seg_mod.DEFAULT_BUCKETS,
         text_col: str = "content",
         retain_versions: int = 3,
-        clear_cache_after_batch: bool = True,
-        segs_per_shard: int | None | str = "auto",
     ):
         self.spark = spark
         self.index_dir = index_dir
@@ -81,36 +135,14 @@ class StreamingIndexer:
         self.n_buckets = n_buckets
         self.text_col = text_col
         self.retain_versions = retain_versions
-        # manifest-list sharding (the Iceberg manifest/manifest-list
-        # structure): entries live in per-seg-range SHARD files under
-        # mdata/, the version manifest only lists shard paths, and a
-        # publish rewrites ONLY shards containing affected segments —
-        # untouched shards carry over by reference, so the manifest
-        # write cost is O(touched), not O(total segments). None = the
-        # inline single-JSON manifest (fine to ~10^6 segments); an int
-        # forces sharding at that span; "auto" (the default) stays
-        # inline below AUTO_SHARD_THRESHOLD entries and shards at
-        # AUTO_SEGS_PER_SHARD beyond it (sticky once sharded — the
-        # span is persisted in the manifest so later versions and GC
-        # agree on shard boundaries).
-        self.segs_per_shard = segs_per_shard
-        # id assignment persists its range-shuffled partitions so both
-        # consumers of a batch (docs write + segment rebuild) see ONE
-        # boundary draw; once the version is published those cached
-        # partitions are dead weight, and a long-running stream would
-        # accumulate one per micro-batch — so the batch callback clears
-        # the session cache after publish by default. Disable only when
-        # sharing the session with other cached workloads (the leak is
-        # small and LRU-evicted, a correctness non-issue).
-        self.clear_cache_after_batch = clear_cache_after_batch
         Path(index_dir).mkdir(parents=True, exist_ok=True)
 
     # -- version pointer (the Load.java atomic-swap analogue) ----------
     def current_version(self) -> int:
-        p = Path(self.index_dir) / "CURRENT"
-        if not p.exists():
+        try:
+            return read_version(self.index_dir)
+        except FileNotFoundError:  # nothing published yet
             return 0
-        return int(json.loads(p.read_text())["version"])
 
     def _publish(self, version: int) -> None:
         p = Path(self.index_dir) / "CURRENT"
@@ -119,61 +151,37 @@ class StreamingIndexer:
         os.replace(tmp, p)  # atomic on POSIX
 
     # -- manifests -------------------------------------------------------
-    def _manifest_path(self, version: int) -> Path:
-        return Path(self.index_dir) / f"v{version}.json"
-
-    def _read_raw(self, version: int | None = None) -> dict:
-        """The version manifest as stored — either inline ``tables`` or
-        a ``shards`` manifest-list. Scalar metadata (seg_size,
-        n_buckets) reads from here without touching any shard."""
-        v = self.current_version() if version is None else version
-        if v == 0:
-            return {"version": 0, "tables": {t: {} for t in TABLES}}
-        return json.loads(self._manifest_path(v).read_text())
+    def _read_raw(self, version: int) -> dict:
+        """Version ``version``'s manifest as stored (shards unresolved)."""
+        return json.loads(_manifest_path(self.index_dir, version).read_text())
 
     def read_manifest(self, version: int | None = None) -> dict:
-        """The manifest of ``version`` (default CURRENT) with shards
-        resolved: ``tables`` maps table -> {seg_id(str) -> relative
-        file-group path}."""
-        man = self._read_raw(version)
-        if "shards" in man:
-            tables: dict = {t: {} for t in TABLES}
-            for t, shard_map in man["shards"].items():
-                for rel in shard_map.values():
-                    tables[t].update(
-                        json.loads((Path(self.index_dir) / rel).read_text())
-                    )
-            man = {**man, "tables": tables}
-        return man
+        """The resolved manifest of ``version`` (default CURRENT)."""
+        if version is None:
+            return self.snapshot()
+        return read_manifest(self.index_dir, version)
+
+    def snapshot(self) -> dict:
+        """The CURRENT snapshot; before the first publish, version 0 with
+        empty tables and the constructor's layout. The constructor's
+        layout also fills in what manifests of older releases lack."""
+        v = self.current_version()
+        snap = {
+            "version": 0,
+            "seg_size": self.seg_size,
+            "n_buckets": self.n_buckets,
+            "tables": {t: {} for t in TABLES},
+        }
+        return {**snap, **read_manifest(self.index_dir, v)} if v else snap
+
+    def current_seg_size(self) -> int:
+        """The CURRENT version's segment granularity — compaction doubles
+        it, so it is version metadata, not indexer construction state."""
+        return int(self.snapshot()["seg_size"])
 
     def load_tables(self) -> tuple[DataFrame, DataFrame, DataFrame]:
-        """(docs, segments, norms) of the CURRENT version; empty frames
-        with the right schemas before the first publish. Each table is a
-        single multi-path parquet scan over exactly the file groups its
-        manifest references — no version-copy is ever materialized."""
-        # NOTE on manifest size: one entry per (table, segment). The
-        # inline mode (segs_per_shard=None) holds them in one JSON —
-        # readable to ~10^6 segments. Beyond that, construct with
-        # segs_per_shard set: entries shard into per-seg-range files
-        # with O(touched)-shard rewrites per publish (the Iceberg
-        # manifest-list structure; tests/test_streaming_ingest.py
-        # asserts the reuse). The read path below is unchanged.
-        man = self.read_manifest()
-        out = []
-        schemas = {
-            "docs": DOCS_SCHEMA,
-            "segments": seg_mod.SEGMENT_SCHEMA,
-            "norms": seg_mod.NORMS_SCHEMA,
-        }
-        for t in TABLES:
-            paths = [
-                f"{self.index_dir}/{rel}" for rel in man["tables"][t].values()
-            ]
-            if paths:
-                out.append(self.spark.read.parquet(*paths))
-            else:
-                out.append(self.spark.createDataFrame([], schemas[t]))
-        return tuple(out)
+        """(docs, segments, norms) of the CURRENT version."""
+        return snapshot_tables(self.spark, self.index_dir, self.snapshot())
 
     # -- the foreachBatch callback --------------------------------------
     def _write_affected(
@@ -211,124 +219,65 @@ class StreamingIndexer:
                 written[d.name.split("=", 1)[1]] = f"{rel}/{d.name}"
         return written
 
-    def current_seg_size(self) -> int:
-        """The CURRENT version's segment granularity — compaction doubles
-        it, so it is version metadata, not indexer construction state."""
-        man = self._read_raw()
-        return int(man.get("seg_size", self.seg_size))
-
-    def current_n_buckets(self) -> int:
-        """The CURRENT version's term-bucket count. Like seg_size this is
-        index layout, not construction state: the scorer prunes file scans with
-        a bucket predicate derived from it, so a reader (or a reopened
-        indexer) that guessed the constructor default against an index
-        built with another bucket count would silently drop matching
-        postings. Persisted in every manifest since v1."""
-        man = self._read_raw()
-        return int(man.get("n_buckets", self.n_buckets))
-
-    def _resolve_span(self, prev_raw: dict, tables: dict) -> int | None:
-        """The shard span for the next manifest, or None for inline.
-
-        Once a version is sharded the span is STICKY (read back from
-        the previous manifest) so untouched shards can be carried by
-        file reference — shard boundaries must agree across versions.
-        In "auto" mode an inline index trips to sharded the first time
-        any table would carry more than AUTO_SHARD_THRESHOLD entries."""
-        if self.segs_per_shard is None:
-            return None  # explicit inline request always honored
-        if "shards" in prev_raw:
-            recorded = prev_raw.get("segs_per_shard")
-            if recorded is not None:
-                return int(recorded)
-            # pre-auto manifest without a recorded span: only an
-            # explicit int constructor could have written it
-            if isinstance(self.segs_per_shard, int):
-                return self.segs_per_shard
-            return AUTO_SEGS_PER_SHARD
-        if isinstance(self.segs_per_shard, int):
-            return self.segs_per_shard
-        n_entries = max((len(m) for m in tables.values()), default=0)
-        return AUTO_SEGS_PER_SHARD if n_entries > AUTO_SHARD_THRESHOLD else None
-
     def _write_manifest(
-        self,
-        v: int,
-        seg_size: int,
-        n_buckets: int,
-        tables: dict,
-        affected: list[int] | None,
+        self, prev: dict, seg_size: int, tables: dict, affected: list[int] | None
     ) -> None:
-        """Write version ``v``'s manifest. Inline mode stores the
-        (table -> seg -> path) map in the version file; shard mode
-        splits it into per-seg-range shard files and rewrites ONLY the
-        shards whose range intersects ``affected`` — every other shard
-        is carried from the previous version's manifest-list by
-        reference (affected=None forces a full rewrite: compaction)."""
-        man: dict = {"version": v, "seg_size": seg_size, "n_buckets": n_buckets}
-        prev_raw = self._read_raw()
-        span = self._resolve_span(prev_raw, tables)
-        if span is None:
-            man["tables"] = tables
-        else:
-            man["segs_per_shard"] = span
-            prev_shards = prev_raw.get("shards", {})
-            dirty = (
-                None
-                if affected is None
-                else {int(s) // span for s in affected}
-            )
-            # a legacy sharded manifest with NO recorded span may have
-            # been written at a different span than we resolved —
-            # carrying its shard files by reference under the new
-            # grouping would silently drop the entries that fall
-            # outside each old file's range. Force a full rewrite.
-            if "segs_per_shard" not in prev_raw and prev_shards:
-                dirty = None
-            mdata = Path(self.index_dir) / "mdata"
-            mdata.mkdir(exist_ok=True)
-            shards_out: dict = {}
-            for t in TABLES:
-                by_idx: dict[int, dict] = {}
-                for s, p in tables.get(t, {}).items():
-                    by_idx.setdefault(int(s) // span, {})[s] = p
-                prev_t = prev_shards.get(t, {})
-                tmap: dict[str, str] = {}
-                for idx, entries in by_idx.items():
-                    key = str(idx)
-                    if dirty is not None and key in prev_t and idx not in dirty:
-                        tmap[key] = prev_t[key]  # untouched: by reference
-                    else:
-                        rel = f"mdata/shard-{t}-{idx}-v{v}.json"
-                        (Path(self.index_dir) / rel).write_text(
-                            json.dumps(entries)
-                        )
-                        tmap[key] = rel
-                shards_out[t] = tmap
-            man["shards"] = shards_out
-        self._manifest_path(v).write_text(json.dumps(man))
+        """Write the manifest of version ``prev["version"] + 1``: its
+        entries split into per-seg-range shard files, and ONLY the shards
+        whose range holds an ``affected`` segment are rewritten. Every
+        other shard is carried from ``prev`` by reference, unless
+        ``prev`` recorded another span (or none: an older inline or
+        sharded manifest) — then the full shard set is rewritten, as it
+        is for ``affected=None`` (compaction)."""
+        v = prev["version"] + 1
+        span = SEGS_PER_SHARD
+        carry = affected is not None and prev.get("segs_per_shard") == span
+        prev_shards = prev["shards"] if carry else {}
+        dirty = {int(s) // span for s in affected or ()}
+        (Path(self.index_dir) / "mdata").mkdir(exist_ok=True)
+        shards: dict = {}
+        for t in TABLES:
+            by_idx: dict[int, dict] = {}
+            for s, p in tables[t].items():
+                by_idx.setdefault(int(s) // span, {})[s] = p
+            prev_t = prev_shards.get(t, {})
+            tmap: dict[str, str] = {}
+            for idx, entries in by_idx.items():
+                key = str(idx)
+                if key in prev_t and idx not in dirty:
+                    tmap[key] = prev_t[key]  # untouched: by reference
+                else:
+                    rel = f"mdata/shard-{t}-{idx}-v{v}.json"
+                    (Path(self.index_dir) / rel).write_text(json.dumps(entries))
+                    tmap[key] = rel
+            shards[t] = tmap
+        man = {
+            "version": v,
+            "seg_size": seg_size,
+            "n_buckets": prev["n_buckets"],
+            "segs_per_shard": span,
+            "shards": shards,
+        }
+        _manifest_path(self.index_dir, v).write_text(json.dumps(man))
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        seg_size = self.current_seg_size()
-        n_buckets = self.current_n_buckets()
-        docs, segs, norms = self.load_tables()
+        snap = self.snapshot()
+        seg_size = snap["seg_size"]
+        docs, segs, norms = snapshot_tables(self.spark, self.index_dir, snap)
         docs_new, segs_new, norms_new, affected = incremental_update(
             docs,
             segs,
             norms,
             batch_df,
             seg_size=seg_size,
-            n_buckets=n_buckets,
+            n_buckets=snap["n_buckets"],
             text_col=self.text_col,
         )
-        man = self.read_manifest()
-        v = self.current_version() + 1
-        if not affected:
-            # pure no-op batch (e.g. re-delivered identical rows): nothing
-            # to write, nothing to publish
+        if not affected:  # nothing to write, nothing to publish
             return
+        v = snap["version"] + 1
         doc_seg = (F.col("doc_id") / seg_size).cast("long")
         doc_pred = seg_range_pred(affected, seg_size)
         seg_pred = F.col("seg_id").isin(affected)
@@ -343,19 +292,18 @@ class StreamingIndexer:
             )
             carried = {
                 s: p
-                for s, p in man["tables"][table].items()
+                for s, p in snap["tables"][table].items()
                 if int(s) not in set(affected)
             }
             carried.update(written)
             new_tables[table] = carried
-        self._write_manifest(v, seg_size, n_buckets, new_tables, affected)
+        self._write_manifest(snap, seg_size, new_tables, affected)
         # publish only after every file group committed (_SUCCESS
         # markers): a crash mid-batch leaves CURRENT on the previous good
         # version, whose file groups GC never touches
         self._publish(v)
         self.gc()
-        if self.clear_cache_after_batch:
-            self.spark.catalog.clearCache()
+        self.spark.catalog.clearCache()
 
     # -- compaction (Lucene background merges, S6 in the streaming path) -
     def compact(self, group: int = 2) -> int:
@@ -372,13 +320,11 @@ class StreamingIndexer:
         fresh version; readers swap atomically and GC reclaims the old
         generations. Returns the new version number.
         """
-        from alix_spark.index import segments as seg_mod_
-
-        seg_size = self.current_seg_size()
-        docs, segs, norms = self.load_tables()
-        m_segs, m_norms = seg_mod_.merge_segments(segs, norms, group=group)
-        new_size = seg_size * group
-        v = self.current_version() + 1
+        snap = self.snapshot()
+        docs, segs, norms = snapshot_tables(self.spark, self.index_dir, snap)
+        m_segs, m_norms = seg_mod.merge_segments(segs, norms, group=group)
+        new_size = snap["seg_size"] * group
+        v = snap["version"] + 1
         doc_seg = (F.col("doc_id") / new_size).cast("long")
         # cover BOTH sources of seg ids: a doc range with documents but
         # no postings (all-empty texts) has no merged segment row, yet
@@ -404,9 +350,7 @@ class StreamingIndexer:
             new_tables[table] = self._write_affected(
                 df, table, seg_col, v, all_segs
             )
-        self._write_manifest(
-            v, new_size, self.current_n_buckets(), new_tables, None
-        )
+        self._write_manifest(snap, new_size, new_tables, None)
         self._publish(v)
         self.gc()
         return v
@@ -414,9 +358,9 @@ class StreamingIndexer:
     # -- retention -------------------------------------------------------
     def gc(self) -> list[str]:
         """Delete manifests older than the last ``retain_versions`` and
-        every file group no retained manifest references. Returns the
-        relative paths removed. Safe for concurrent readers of retained
-        versions: referenced file groups are never touched."""
+        every shard file and file group no retained manifest references.
+        Returns the relative paths removed. Safe for concurrent readers
+        of retained versions: referenced files are never touched."""
         cur = self.current_version()
         if cur == 0:
             return []
@@ -424,17 +368,16 @@ class StreamingIndexer:
         referenced: set[str] = set()
         referenced_shards: set[str] = set()
         for v in range(low, cur + 1):
-            if not self._manifest_path(v).exists():
+            if not _manifest_path(self.index_dir, v).exists():
                 continue
-            raw = self._read_raw(v)
-            for shard_map in raw.get("shards", {}).values():
+            man = read_manifest(self.index_dir, v)
+            for shard_map in man.get("shards", {}).values():
                 referenced_shards.update(shard_map.values())
-            man = self.read_manifest(v)
             for t in TABLES:
                 referenced.update(man["tables"][t].values())
         removed = []
         for v in range(1, low):
-            mp = self._manifest_path(v)
+            mp = _manifest_path(self.index_dir, v)
             if mp.exists():
                 mp.unlink()
                 removed.append(mp.name)

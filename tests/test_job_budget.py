@@ -1,10 +1,12 @@
-"""Driver job budget of the reader query path: the number of Spark jobs a
-ranked query launches is pinned, so a stray ``collect()`` or a new
-planning-time job fails here instead of showing up as latency.
+"""Driver job budget of the reader query path and of the streaming
+index: the number of Spark jobs a ranked query, a streaming open and a
+one-file streaming update launch is pinned, so a stray ``collect()`` or
+a new planning-time job fails here instead of showing up as latency.
 
 Jobs are counted per labelled region with
 ``statusTracker().getJobIdsForGroup`` over an index built by the CLI and
-opened with :class:`IndexReader`, the production open path.
+opened with :class:`IndexReader`, the production open path, and over a
+:class:`StreamingIndexer` index opened with ``IndexReader.open_streaming``.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ import pytest
 from alix_spark import build_index
 from alix_spark.index.reader import IndexReader
 from alix_spark.search import wand as wand_mod
+from alix_spark.streaming import StreamingIndexer
 from tests.conftest import SF_SMOKE
 
 # one query per route the reader used to take: OR, wildcard, MUST /
@@ -30,6 +33,13 @@ SEARCH_PLAN_JOBS = 1
 # rank window adds one)
 SEARCH_COLLECT_JOBS = 3
 BATCH_COLLECT_JOBS = 4
+# opening a streaming index: one parquet schema read per table, and the
+# corpus stats aggregate over the norms
+STREAM_OPEN_JOBS = 6
+# one streaming micro-batch of one changed file (an update in place): the
+# table opens, the max-id and classification aggregates, the segment
+# rebuild and the three file-group writes
+STREAM_UPDATE_JOBS = 21
 
 _groups = itertools.count()
 
@@ -97,3 +107,37 @@ def test_scorer_plans_without_jobs(spark, reader):
     assert (plan_one, plan_batch) == (0, 0)
     assert _jobs(spark, one.collect)[1] == SEARCH_COLLECT_JOBS
     assert _jobs(spark, batch.collect)[1] == BATCH_COLLECT_JOBS
+
+
+def _rows(spark, rows):
+    return spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    )
+
+
+@pytest.fixture(scope="module")
+def stream_index(spark, tmp_path_factory):
+    ix = StreamingIndexer(
+        spark, str(tmp_path_factory.mktemp("budget_stream")), seg_size=8
+    )
+    ix.process_batch(
+        _rows(spark, [("o/r", f"f{i}", "c1", "py", f"alpha beta tok{i} fast join")
+                      for i in range(40)]),
+        0,
+    )
+    return ix
+
+
+def test_stream_open_job_budget(spark, stream_index):
+    rd, jobs = _jobs(
+        spark, lambda: IndexReader.open_streaming(spark, stream_index.index_dir)
+    )
+    assert jobs <= STREAM_OPEN_JOBS
+    assert rd.n_docs == 40
+
+
+def test_stream_update_job_budget(spark, stream_index):
+    one_file = _rows(spark, [("o/r", "f3", "c2", "py", "updated omega")])
+    _, jobs = _jobs(spark, lambda: stream_index.process_batch(one_file, 1))
+    assert jobs <= STREAM_UPDATE_JOBS
+    assert stream_index.current_version() == 2

@@ -423,12 +423,12 @@ def test_index_reader_opens_streaming_manifest(spark, tmp_path):
 @pytest.fixture(scope="module")
 def sharded(spark, tmp_path_factory):
     """The same three micro-batch scenario as `manifested`, but with
-    manifest-list sharding forced low (segs_per_shard=4): 7 segments →
+    the manifest shard span forced low (SEGS_PER_SHARD=4): 7 segments →
     shards {0: segs 0-3, 1: segs 4-6} per table."""
+    import alix_spark.streaming as st
+
     idx = tmp_path_factory.mktemp("sharded_idx")
-    ix = StreamingIndexer(
-        spark, str(idx), seg_size=8, retain_versions=2, segs_per_shard=4
-    )
+    ix = StreamingIndexer(spark, str(idx), seg_size=8, retain_versions=2)
     b1 = _rows(
         spark,
         [
@@ -445,10 +445,12 @@ def sharded(spark, tmp_path_factory):
     )
     b3 = _rows(spark, [("org/r0", "src/f27.py", "c3", "py", "updated eta")])
     raws = {}
-    for bid, b in enumerate((b1, b2, b3)):
-        ix.process_batch(b, bid)
-        v = ix.current_version()
-        raws[v] = ix._read_raw(v)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(st, "SEGS_PER_SHARD", 4)
+        for bid, b in enumerate((b1, b2, b3)):
+            ix.process_batch(b, bid)
+            v = ix.current_version()
+            raws[v] = ix._read_raw(v)
     return ix, raws
 
 
@@ -505,15 +507,16 @@ def test_sharded_manifest_gc_drops_orphan_shards(sharded):
     assert os.path.exists(os.path.join(ix.index_dir, "data/gen=1/docs/seg=1"))
 
 
-def test_sharded_manifest_compaction(spark, tmp_path):
+def test_sharded_manifest_compaction(spark, tmp_path, monkeypatch):
     """compact() on a sharded-manifest index: the merged version writes
     a fresh full shard set (affected=None forces the rewrite), queries
     stay identical, and GC eventually reclaims pre-compaction shards."""
+    import alix_spark.streaming as st
     from alix_spark.index.reader import IndexReader
 
+    monkeypatch.setattr(st, "SEGS_PER_SHARD", 2)
     ix = StreamingIndexer(
-        spark, str(tmp_path / "cidx"), seg_size=8, retain_versions=1,
-        segs_per_shard=2,
+        spark, str(tmp_path / "cidx"), seg_size=8, retain_versions=1
     )
     ix.process_batch(
         _rows(spark, [("o/r", f"f{i}", "c1", "py",
@@ -539,32 +542,46 @@ def test_sharded_manifest_compaction(spark, tmp_path):
 
 
 def test_auto_sharding_trips_at_threshold(spark, tmp_path, monkeypatch):
-    """A DEFAULT-constructed indexer (segs_per_shard="auto") stays on
-    the cheap inline manifest below AUTO_SHARD_THRESHOLD entries, then
-    shards (span AUTO_SEGS_PER_SHARD, recorded in the manifest) the
-    first version that crosses it — and stays sharded, carrying
-    untouched shards by reference on the next small batch."""
+    """An index whose v1 manifest is in the older inline shape (tables
+    in the version file, no shards) opens and serves; the next publish
+    upgrades it to shards at SEGS_PER_SHARD (a full shard set, since
+    nothing inline can be carried), and the publish after that carries
+    untouched shards by reference."""
+    import json
+    import shutil
+    from pathlib import Path
+
     import alix_spark.streaming as st
     from alix_spark.index.reader import IndexReader
 
-    monkeypatch.setattr(st, "AUTO_SEGS_PER_SHARD", 2)
-    monkeypatch.setattr(st, "AUTO_SHARD_THRESHOLD", 4)
+    monkeypatch.setattr(st, "SEGS_PER_SHARD", 2)
     ix = StreamingIndexer(spark, str(tmp_path / "aidx"), seg_size=8)
-    assert ix.segs_per_shard == "auto"
-    # v1: 24 docs -> 3 segments <= threshold 4 -> inline
+    # v1: 24 docs -> 3 segments, rewritten to the inline shape
     ix.process_batch(_rows(spark, [
         ("o/r", f"f{i}", "c1", "py", f"alpha beta tok{i} fast join")
         for i in range(24)]), 0)
     raw1 = ix._read_raw(1)
+    inline = {k: raw1[k] for k in ("version", "seg_size", "n_buckets")}
+    inline["tables"] = ix.read_manifest(1)["tables"]
+    (Path(ix.index_dir) / "v1.json").write_text(json.dumps(inline))
+    shutil.rmtree(Path(ix.index_dir) / "mdata")
+    raw1 = ix._read_raw(1)
     assert "tables" in raw1 and "shards" not in raw1
-    # v2: 48 docs -> 6 segments > threshold -> sharded, span recorded
+    rd = IndexReader.open_streaming(spark, ix.index_dir)
+    assert rd.meta["version"] == 1 and rd.n_docs == 24
+    assert rd.search("fast join", k=5).count() == 5
+    # v2: 48 docs -> 6 segments -> sharded at SEGS_PER_SHARD, span
+    # recorded, every shard written fresh
     ix.process_batch(_rows(spark, [
         ("o/r", f"g{i}", "c1", "py", f"gamma delta tok{i} fast join")
         for i in range(24)]), 1)
     raw2 = ix._read_raw(2)
-    assert "shards" in raw2 and raw2["segs_per_shard"] == 2
-    # v3: 1-doc update -> sticky sharded; untouched shards carried by
-    # file reference from v2
+    assert "shards" in raw2 and "tables" not in raw2
+    assert raw2["segs_per_shard"] == 2
+    assert all(
+        "v2" in p for smap in raw2["shards"].values() for p in smap.values()
+    )
+    # v3: 1-doc update; untouched shards carried by file reference
     ix.process_batch(
         _rows(spark, [("o/r", "f0", "c2", "py", "updated omega")]), 2)
     raw3 = ix._read_raw(3)
@@ -581,38 +598,95 @@ def test_auto_sharding_trips_at_threshold(spark, tmp_path, monkeypatch):
         r["term"] for r in rd.forms.select("term").collect()}
 
 
-def test_legacy_sharded_manifest_forces_full_rewrite(spark, tmp_path):
-    """A sharded manifest written before the span was recorded
-    (pre-auto format, no "segs_per_shard" key) may use ANY span — so
-    the next publish must NOT carry its shard files by reference under
-    a guessed grouping (that silently drops the entries outside each
-    old file's range). It must rewrite the full shard set."""
+def test_legacy_sharded_manifest_forces_full_rewrite(spark, tmp_path, monkeypatch):
+    """A sharded manifest whose shards follow another span — recorded
+    (span 3) or not recorded at all (an older format) — must NOT have
+    its shard files carried by reference under the current grouping
+    (that silently drops the entries outside each old file's range).
+    The next publish rewrites the full shard set."""
     import json
     from pathlib import Path
 
+    import alix_spark.streaming as st
     from alix_spark.index.reader import IndexReader
 
-    ix = StreamingIndexer(
-        spark, str(tmp_path / "lidx"), seg_size=8, segs_per_shard=3
-    )
-    ix.process_batch(_rows(spark, [
-        ("o/r", f"f{i}", "c1", "py", f"alpha beta tok{i} fast join")
-        for i in range(40)]), 0)  # 5 segments, span 3 -> shards {0,1}
-    # simulate the legacy format: drop the recorded span from v1
+    def publish_at(span, rows, bid):
+        monkeypatch.setattr(st, "SEGS_PER_SHARD", span)
+        ix.process_batch(_rows(spark, rows), bid)
+        return ix._read_raw(ix.current_version())
+
+    def all_fresh(raw):
+        v = f"v{raw['version']}"
+        return all(
+            v in p for smap in raw["shards"].values() for p in smap.values()
+        )
+
+    ix = StreamingIndexer(spark, str(tmp_path / "lidx"), seg_size=8)
+    # 40 docs -> 5 segments; span 3 -> shards {0: segs 0-2, 1: segs 3-4}
+    publish_at(3, [("o/r", f"f{i}", "c1", "py", f"alpha beta tok{i} fast join")
+                   for i in range(40)], 0)
+    # no span recorded: drop it from v1
     mp = Path(ix.index_dir) / "v1.json"
     man = json.loads(mp.read_text())
     del man["segs_per_shard"]
     mp.write_text(json.dumps(man))
-    # reopen with the default (auto) constructor; tiny update batch
-    ix2 = StreamingIndexer(spark, str(tmp_path / "lidx"), seg_size=8)
-    ix2.process_batch(
-        _rows(spark, [("o/r", "f0", "c2", "py", "updated omega")]), 1)
-    raw2 = ix2._read_raw(2)
-    # every shard file is freshly written at v2 (none carried from v1)
-    assert all(
-        "v2" in p for smap in raw2["shards"].values() for p in smap.values()
-    ), raw2["shards"]
+    # updates land in seg 4 (ids follow path order: f7, f8, f9 are the
+    # last three), so at span 2 shards 0 and 1 are untouched
+    raw2 = publish_at(2, [("o/r", "f9", "c2", "py", "updated omega")], 1)
+    assert raw2["segs_per_shard"] == 2 and all_fresh(raw2), raw2["shards"]
+    # span 3 recorded, span 2 current
+    raw3 = publish_at(3, [("o/r", "f8", "c3", "py", "updated sigma")], 2)
+    assert raw3["segs_per_shard"] == 3
+    raw4 = publish_at(2, [("o/r", "f7", "c4", "py", "updated kappa")], 3)
+    assert raw4["segs_per_shard"] == 2 and all_fresh(raw4), raw4["shards"]
     # and the index still serves every segment's postings
-    rd = IndexReader.open_streaming(spark, ix2.index_dir)
+    rd = IndexReader.open_streaming(spark, ix.index_dir)
+    assert rd.n_docs == 40
     assert rd.search("fast join", k=5).count() == 5
-    assert "updated" in {r["term"] for r in rd.forms.select("term").collect()}
+    terms = {r["term"] for r in rd.forms.select("term").collect()}
+    assert {"omega", "sigma", "kappa"} <= terms
+
+
+def test_open_streaming_pins_one_snapshot(spark, tmp_path, monkeypatch):
+    """A compaction that publishes v2 right after the reader's pointer
+    read does not leak into the reader: its version, layout and tables
+    all come from v1, and it answers exactly as a reader opened before."""
+    import alix_spark.streaming as st
+    from alix_spark.index.reader import IndexReader
+
+    ix = StreamingIndexer(spark, str(tmp_path / "pidx"), seg_size=8)
+    ix.process_batch(_rows(spark, [
+        ("o/r", f"f{i}", "c1", "py", f"alpha beta tok{i} fast join")
+        for i in range(30)]), 0)
+    before = IndexReader.open_streaming(spark, ix.index_dir)
+    exp = before.search("fast join", k=5).collect()
+
+    real = st.read_version
+    calls = []
+
+    def read_then_compact(index_dir):
+        v = real(index_dir)
+        calls.append(v)
+        if len(calls) == 1:  # the reader's read; compact() reads again
+            ix.compact(group=2)
+        return v
+
+    monkeypatch.setattr(st, "read_version", read_then_compact)
+    rd = IndexReader.open_streaming(spark, ix.index_dir)
+    assert calls[0] == 1
+    assert ix.current_version() == 2 and ix.current_seg_size() == 16
+    assert rd.meta["version"] == 1 and rd.meta["seg_size_final"] == 8
+    files = rd.docs.inputFiles() + rd.segments.inputFiles() + rd.norms.inputFiles()
+    assert files and all("/data/gen=1/" in f for f in files), files
+    assert rd.search("fast join", k=5).collect() == exp
+
+
+def test_open_streaming_missing_index_raises(spark, tmp_path):
+    """A path holding no streaming index fails loudly and creates
+    nothing, instead of serving an empty index."""
+    from alix_spark.index.reader import IndexReader
+
+    missing = tmp_path / "no_idx"
+    with pytest.raises(FileNotFoundError, match="no_idx"):
+        IndexReader.open_streaming(spark, str(missing))
+    assert not missing.exists()
